@@ -17,11 +17,23 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): the filters are all deterministic predicates on
   * scan columns → parquet row-group pruning + predicate pushdown do the
-  * B-tree's job. The window shuffles on `(asset_id, date)` — the panel's
-  * natural key, so the shuffle is unavoidable *once* and AQE coalesces
-  * post-shuffle partitions. For the bulk variant the query set is always
-  * tiny relative to the panel → broadcast it, never shuffle the panel by
-  * query id.
+  * B-tree's job.
+  *   - Single-key reads ([[asOfRange]], [[KeyValue.pointLookup]]) run as
+  *     ONE exchange-free stage: the pruned scan is coalesced to a single
+  *     partition, which already satisfies the window's clustering and
+  *     the presentation sort's ordering, so the plan has no shuffle and
+  *     no range-sampling job — one job, one task. That task's input is
+  *     bounded by (days in range) × (revision depth) rows plus the
+  *     footers of the touched months: the reference's single sequential
+  *     leaf walk. Precondition: the asset and date predicates push into
+  *     the scan, as they do on TickStore (month PartitionFilters +
+  *     PushedFilters), the findb connector and the parquet panels. Over
+  *     a source that cannot prune, that one task would read it whole.
+  *   - Whole-panel reads ([[asOfSnapshot]], the LWW family) shuffle on
+  *     `(asset_id, date)`, the panel's natural key, exactly once; AQE
+  *     coalesces the post-shuffle partitions.
+  *   - For the bulk variant the query set is always tiny relative to the
+  *     panel → broadcast it, never shuffle the panel by query id.
   */
 object AsOf {
 
@@ -34,12 +46,17 @@ object AsOf {
 
   /** A1 `asof_point` — single-asset date-range as-of query.
     * Mirrors reference src/btree/file.rs:425 `BTree::query`.
+    *
+    * The key filter sits directly on the scan (pushdown, month pruning);
+    * `coalesce(1)` above it makes the rank and the sort single-partition,
+    * so the read plans no exchange (see the scale notes above).
     */
   def asOfRange(panel: DataFrame, assetId: Long, startDate: String, endDate: String, asOf: String): DataFrame = {
     val filtered = panel.filter(
       col("asset_id") === assetId &&
         col("date").between(lit(startDate).cast("date"), lit(endDate).cast("date")) &&
         col("ts") <= lit(asOf).cast("timestamp"))
+      .coalesce(1)
     latestPerKey(filtered, Seq("asset_id", "date"))
       .select(col("asset_id"), col("date"), col("ts"), col("value"))
       .orderBy(col("date").desc)

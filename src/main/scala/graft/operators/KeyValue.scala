@@ -19,11 +19,16 @@ object KeyValue {
   /** A3 `point_lookup` — exact composite-key lookup, returning the
     * current (latest-knowledge) value for (asset, date).
     * Reference: src/btree/mem.rs:387 `lookup`. Predicates push to the
-    * parquet scan (PushedFilters) → at scale this touches one partition
-    * and the row groups whose min/max straddle the key.
+    * parquet scan (PushedFilters; on a TickStore also the key's month as
+    * PartitionFilters) → at scale this reads one month directory and the
+    * row groups whose min/max straddle the key. The filtered rows (the
+    * key's revisions) are coalesced to one partition, so the rank runs
+    * in the scan's own stage: one job, one task, no exchange — the
+    * single-key case of [[AsOf.asOfRange]]'s plan.
     */
   def pointLookup(panel: DataFrame, assetId: Long, date: String): DataFrame = {
     val filtered = panel.filter(col("asset_id") === assetId && col("date") === lit(date).cast("date"))
+      .coalesce(1)
     val w = Window.partitionBy(col("asset_id"), col("date")).orderBy(col("ts").desc, col("seq").desc)
     filtered.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("asset_id"), col("date"), col("ts"), col("value"))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -12,9 +12,10 @@ import org.apache.spark.sql.types.{DateType, StringType}
   * `TickStore` partitions by `date_month = yyyy-MM(date)`; a user query
   * filtering only on `date` would scan every month directory. This rule
   * conjoins the implied month bounds (`date ≥ d ⇒ date_month ≥
-  * month(d)`, etc.), which Spark's scan planning turns into
-  * PartitionFilters — directory-level pruning, the B-tree inner-node
-  * traversal analog, without callers having to use `TickStore.scan`.
+  * month(d)`, `date = d ⇒ date_month = month(d)`, etc.), which Spark's
+  * scan planning turns into PartitionFilters — directory-level pruning,
+  * the B-tree inner-node traversal analog, without callers having to use
+  * `TickStore.scan`.
   *
   * Terminates at fixpoint: once the derived predicate references
   * `date_month`, the guard stops re-firing.
@@ -57,6 +58,8 @@ object DeriveMonthPartitionFilter extends Rule[LogicalPlan] with PredicateHelper
       val dateAttr = child.output.find(a => a.name == "date" && a.dataType == DateType).get
       val monthAttr = child.output.find(_.name == "date_month").get
       val derived: Seq[Expression] = splitConjunctivePredicates(cond).collect {
+        case EqualTo(a: AttributeReference, Literal(v: Int, DateType))
+          if a.semanticEquals(dateAttr) => EqualTo(monthAttr, Literal(monthOf(v)))
         case GreaterThanOrEqual(a: AttributeReference, Literal(v: Int, DateType))
           if a.semanticEquals(dateAttr) => GreaterThanOrEqual(monthAttr, Literal(monthOf(v)))
         case GreaterThan(a: AttributeReference, Literal(v: Int, DateType))

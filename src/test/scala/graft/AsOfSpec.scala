@@ -54,6 +54,33 @@ class AsOfSpec extends SparkSpec {
     assert(asOf(1, "2020-03-15", "2020-05-15", 21) === Seq(2200.0, 220.0))
   }
 
+  test("asOfRange equals the two-exchange window form on a revised multi-month TickStore") {
+    val store = RevisedTickStore.read(spark)
+    // several scan partitions, so the single-stage plan really merges them
+    assert(store.rdd.getNumPartitions > 1)
+    val cases = Seq(
+      (0L, "2020-01-25", "2020-02-10", "2020-04-30 00:00:00"), // Jan→Feb, base ticks only
+      (0L, "2020-01-25", "2020-03-05", "2020-05-01 00:00:00"), // equal-ts revisions, seq decides
+      (1L, "2020-02-20", "2020-04-05", "2020-12-31 00:00:00"), // Feb→Apr, every revision visible
+      (1L, "2020-02-15", "2020-02-20", "2020-02-17 12:00:00"), // as-of hides the range's tail
+      (2L, "2020-03-25", "2020-04-10", "2020-05-02 00:00:00"), // a later file loses the seq tie
+      (3L, "2020-01-20", "2020-04-10", "2020-06-15 00:00:00"), // all four months
+      (3L, "2020-01-20", "2020-04-10", "2020-01-01 00:00:00"), // before every revision
+      (9L, "2020-01-20", "2020-04-10", "2020-12-31 00:00:00")) // absent asset
+    val got = cases.map { case (a, s, e, t) =>
+      val rows = AsOf.asOfRange(store, a, s, e, t).collect().toSeq
+      assert(rows === RevisedTickStore.windowAsOfRange(store, a, s, e, t).collect().toSeq,
+        s"asOfRange($a, $s, $e, $t)")
+      rows.map(r => (r.getDate(1).toString, r.getDouble(3)))
+    }
+    // the comparison is not vacuous: ties, hidden revisions and empties
+    assert(got(1).contains(("2020-01-26", 206.0)) && got(1).contains(("2020-01-29", 109.0)))
+    assert(got(3).map(_._1) === Seq("2020-02-16", "2020-02-15"))
+    assert(got(4).contains(("2020-03-28", 2368.0)))
+    assert(got(5).size === 82 && got(5).contains(("2020-02-29", 3540.0)))
+    assert(got(6).isEmpty && got(7).isEmpty)
+  }
+
   test("asof_bulk matches per-query asOfRange") {
     val queries = Seq(
       (0L, 0L, d("2020-01-15"), d("2020-04-05"), ts(20)),

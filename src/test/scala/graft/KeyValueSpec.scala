@@ -31,6 +31,24 @@ class KeyValueSpec extends SparkSpec {
     assert(out(0).getAs[Double]("value") === 101.0)
   }
 
+  test("pointLookup equals the window form on a revised multi-month TickStore") {
+    val store = RevisedTickStore.read(spark)
+    val keys = Seq(
+      (0L, "2020-01-26") -> Some(206.0),  // equal-ts revisions, the higher seq wins
+      (2L, "2020-03-28") -> Some(2368.0), // a later file with a lower seq loses the tie
+      (3L, "2020-02-29") -> Some(3540.0), // late revision in another month
+      (1L, "2020-04-10") -> Some(1181.0), // last day, one revision
+      (1L, "2020-04-09") -> Some(1080.0), // base tick only
+      (9L, "2020-02-01") -> None,         // absent asset
+      (0L, "2020-05-01") -> None)         // absent date, no month partition
+    for (((a, dt), want) <- keys) {
+      val rows = KeyValue.pointLookup(store, a, dt).collect().toSeq
+      assert(rows === RevisedTickStore.windowPointLookup(store, a, dt).collect().toSeq,
+        s"pointLookup($a, $dt)")
+      assert(rows.map(_.getAs[Double]("value")) === want.toSeq, s"pointLookup($a, $dt)")
+    }
+  }
+
   test("range_scan is inclusive and lexicographic on the composite key — mem.rs lookup_range") {
     val out = KeyValue.rangeScan(panel, 1L, "2024-01-02", 2L, "2024-01-01")
       .select("value").collect().map(_.getDouble(0))

@@ -451,6 +451,37 @@ class PlanAuditSpec extends SparkSpec {
       s"keyness_terms exceeded count aggs + token join + rank + sort: ${shuffles("keyness_terms")}")
   }
 
+  test("single-key reads plan no exchange and keep their scan pruning") {
+    def exchanges(plan: String): Int = plan.linesIterator.count(_.contains("Exchange"))
+    // the registry's panel reads: one stage, key predicates still pushed
+    for ((q, asset) <- Seq("asof_point" -> 7, "point_lookup" -> 5)) {
+      val plan = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        .queryExecution.executedPlan.toString
+      assert(exchanges(plan) === 0, s"$q plans an exchange:\n$plan")
+      assert(plan.contains("PushedFilters: [") && plan.contains(s"EqualTo(user_id,$asset)"),
+        s"$q scan lost its pushdown:\n$plan")
+    }
+    // a TickStore read: the derived month bound must still reach the
+    // scan as PartitionFilters (directory pruning) beside PushedFilters
+    spark.experimental.extraOptimizations = Seq(graft.plans.DeriveMonthPartitionFilter)
+    try {
+      val store = RevisedTickStore.read(spark)
+      for ((name, df, months) <- Seq(
+          ("asOfRange", graft.operators.AsOf.asOfRange(store, 1L, "2020-01-25", "2020-02-10",
+            "2020-12-31 00:00:00"), Seq("2020-01", "2020-02")),
+          ("pointLookup", graft.operators.KeyValue.pointLookup(store, 1L, "2020-02-29"), Seq("2020-02")))) {
+        val plan = df.queryExecution.executedPlan.toString
+        assert(exchanges(plan) === 0, s"$name over a TickStore plans an exchange:\n$plan")
+        assert(plan.contains("PushedFilters: [") && plan.contains("EqualTo(asset_id,1)"),
+          s"$name over a TickStore lost its pushdown:\n$plan")
+        val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).mkString
+        for (m <- months)
+          assert(pf.matches(s""".*PartitionFilters: \\[[^\\]]*date_month[^\\]]*$m[^\\]]*\\].*"""),
+            s"$name over a TickStore lost its month pruning: $pf")
+      }
+    } finally spark.experimental.extraOptimizations = Nil
+  }
+
   test("no query plan contains a cartesian product or unplanned BNL join") {
     val sfDir = "/root/testdata/sf0.001"
     // The replay/lifecycle harness rows EXECUTE their streaming or
