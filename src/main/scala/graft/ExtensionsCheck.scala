@@ -31,7 +31,7 @@ object ExtensionsCheck {
     import spark.implicits._
     val l = Seq((1L, new java.sql.Timestamp(10000L), 1L, 1.0)).toDF("k", "ts", "seq", "value")
     val r = Seq((1L, new java.sql.Timestamp(5000L), 1L, 9.0)).toDF("k", "ts", "seq", "rvalue")
-    val out = graft.plans.AsOfJoinNative(l, r, "k", "ts", "rvalue").collect()
+    val out = graft.plans.AsOfJoinNative(l, r, "k").collect()
     assert(out.length == 1 && out(0).getAs[Double]("asof_value") == 9.0)
 
     println("EXTENSIONS_OK")

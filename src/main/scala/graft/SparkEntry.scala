@@ -49,6 +49,22 @@ object SparkEntry {
         col("at").cast("timestamp").as("asof_ts"))
   }
 
+  /** The `asof_join*` rows' shared frame: purchases (left) joined to
+    * views (right, `value` as `rvalue`), both as (user_id, ts, seq =
+    * event_id, …) from `events`, presented as (event_id, user_id, ts,
+    * value, asof_value, extraCols…) in event_id order.
+    */
+  private def asOfJoinRow(s: SparkSession, dir: String, extraCols: String*)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ev = Tables.events(s, dir)
+    def side(eventType: String, valueAs: String) = ev.filter(col("event_type") === eventType)
+      .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as(valueAs))
+    join(side("purchase", "value"), side("view", "rvalue"))
+      .select((Seq(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"),
+        col("asof_value")) ++ extraCols.map(col)): _*)
+      .orderBy(col("event_id"))
+  }
+
   private def deleteKeySet(spark: SparkSession): DataFrame = {
     val rows = Seq((1L, "2024-01-05"), (2L, "2024-01-10"), (3L, "2024-01-15"), (5L, "2024-01-20"))
     import spark.implicits._
@@ -250,80 +266,23 @@ object SparkEntry {
     }),
     "delete_returning" -> ((s, dir) =>
       KeyValue.deleteReturning(Tables.panel(s, dir), deleteKeySet(s))),
-    "asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as("rvalue"))
-      AsOf.asOfJoin(purchases, views, "user_id", Seq("value"))
-        .select(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"), col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
+    "asof_join" -> ((s, dir) =>
+      asOfJoinRow(s, dir)(AsOf.asOfJoin(_, _, "user_id", Seq("value")))),
     // A8h — the hot-key-safe time-sliced variant; the oracle is the
     // PLAIN asof_join SQL, proving the two-phase decomposition is
     // semantically invisible.
-    "asof_join_skew" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as("rvalue"))
-      AsOf.asOfJoinSkewSafe(purchases, views, "user_id", Seq("value"))
-        .select(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"), col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
-    "asof_join_inclusive" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as("rvalue"))
-      AsOf.asOfJoinInclusive(purchases, views, "user_id", Seq("value"))
-        .select(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"), col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
-    "asof_join_forward" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as("rvalue"))
-      AsOf.asOfJoinForward(purchases, views, "user_id", Seq("value"))
-        .select(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"), col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
-    "asof_join_nearest" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as("rvalue"))
-      AsOf.asOfJoinNearest(purchases, views, "user_id", Seq("value"))
-        .select(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"),
-          col("asof_value"), col("asof_dir"))
-        .orderBy(col("event_id"))
-    }),
-    "asof_join_tolerance" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as("rvalue"))
-      AsOf.asOfJoinTolerance(purchases, views, "user_id", Seq("value"), maxLagSec = 3600L)
-        .select(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"), col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
-    "asof_join_native" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("seq"), col("value").as("rvalue"))
-      graft.plans.AsOfJoinNative(purchases, views, "user_id", "ts", "rvalue")
-        .select(col("seq").as("event_id"), col("user_id"), col("ts"), col("value"), col("asof_value"))
-        .orderBy(col("event_id"))
-    }),
+    "asof_join_skew" -> ((s, dir) =>
+      asOfJoinRow(s, dir)(AsOf.asOfJoinSkewSafe(_, _, "user_id", Seq("value")))),
+    "asof_join_inclusive" -> ((s, dir) =>
+      asOfJoinRow(s, dir)(AsOf.asOfJoinInclusive(_, _, "user_id", Seq("value")))),
+    "asof_join_forward" -> ((s, dir) =>
+      asOfJoinRow(s, dir)(AsOf.asOfJoinForward(_, _, "user_id", Seq("value")))),
+    "asof_join_nearest" -> ((s, dir) =>
+      asOfJoinRow(s, dir, "asof_dir")(AsOf.asOfJoinNearest(_, _, "user_id", Seq("value")))),
+    "asof_join_tolerance" -> ((s, dir) =>
+      asOfJoinRow(s, dir)(AsOf.asOfJoinTolerance(_, _, "user_id", Seq("value"), maxLagSec = 3600L))),
+    "asof_join_native" -> ((s, dir) =>
+      asOfJoinRow(s, dir)(graft.plans.AsOfJoinNative(_, _, "user_id"))),
     // The native exec on its home turf: both sides pre-bucketed +
     // sorted on the join key (TickStore.writeBucketedTable), so
     // EnsureRequirements elides every Exchange/Sort — the zero-shuffle
@@ -347,7 +306,7 @@ object SparkEntry {
               col("event_id").as("seq"), col("value").as("rvalue")),
           tv, s"$base/v", buckets = 8, sortCols = Seq("asset_id", "ts", "seq"))
       }
-      graft.plans.AsOfJoinNative(s.table(tp), s.table(tv), "asset_id", "ts", "rvalue")
+      graft.plans.AsOfJoinNative(s.table(tp), s.table(tv), "asset_id")
         .select(col("seq").as("event_id"), col("asset_id").as("user_id"),
           col("ts"), col("value"), col("asof_value"))
         .orderBy(col("event_id"))

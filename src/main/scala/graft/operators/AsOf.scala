@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.AsOfJoinNative
+
 /** Bitemporal as-of (point-in-time) operators.
   *
   * Re-expresses the reference's core query (reference:
@@ -113,50 +115,86 @@ object AsOf {
     asOfBulk(pruned, queries)
   }
 
+  /** The union-sort variants' input: left rows tagged `_side` 1 with a
+    * null `_rv`, right rows tagged `_side` 0 carrying `rvalue` as `_rv`,
+    * each side null-padded to the other's columns. `withRts` adds
+    * `_rts`, the right row's ts where its value is non-null: an
+    * ignore-nulls window then picks value and timestamp from the SAME
+    * right row, so a gap or lag check measures the row the value came
+    * from.
+    */
+  private def tagged(left: DataFrame, right: DataFrame, key: String, leftCols: Seq[String],
+                     withRts: Boolean = false): DataFrame = {
+    def rts(c: Column) = if (withRts) Seq(c.as("_rts")) else Nil
+    val l = left.select(
+      (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"), lit(null).cast("double").as("_rv")) ++
+        rts(lit(null).cast("timestamp")) ++ leftCols.map(col)): _*)
+    val r = right.select(
+      (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"), col("rvalue").as("_rv")) ++
+        rts(when(col("rvalue").isNotNull, col("ts"))) ++
+        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
+    l.unionByName(r)
+  }
+
+  /** The backward joins' shared body: the one-pass merge, trimmed to
+    * (key, ts, seq, leftCols…, asof_value).
+    */
+  private def merged(left: DataFrame, right: DataFrame, key: String, leftCols: Seq[String],
+                     inclusive: Boolean): DataFrame =
+    AsOfJoinNative(left, right, key, inclusive)
+      .select((Seq(key, "ts", "seq") ++ leftCols :+ "asof_value").map(col): _*)
+
   /** A8 `asof_join` — enrich each `left` row with the latest `right`
     * value for the same key strictly before the left row's timestamp.
     *
     * Generalizes the reference's as-of semantics (src/btree/file.rs:425)
-    * to two tables. Implemented with the union+last_value trick rather
-    * than a range join: tag right rows 0 / left rows 1, sort within key
-    * by (ts, side, seq), carry `last(value ignoring nulls)` forward, keep
-    * left rows. One shuffle on the join key, no O(left × right)
-    * intermediate — this is what survives skewed keys at 100 TB, where a
-    * per-row range join would not.
+    * to two tables, run on the one-pass merge [[AsOfJoinNative]] rather
+    * than a range join: each side shuffles once on the key and sorts by
+    * (key, ts) — the right side by (key, ts, seq) — and a single merge
+    * pass carries the latest right value forward. O(1) state per key, no
+    * O(left × right) intermediate — this is what survives skewed keys at
+    * 100 TB, where a per-row range join would not.
     *
-    * `left`: (key, ts, seq, leftCols…); `right`: (key, ts, seq, rvalue).
-    * Strict `<`: a right row at exactly the left ts is NOT visible
-    * (left rows sort before right rows on ties).
+    * `left`: (key, ts, seq, leftCols…); `right`: (key, ts, seq, rvalue),
+    * with key `long`, ts `timestamp` and rvalue `double` — any other type
+    * throws IllegalArgumentException at call time. Output: (key, ts, seq,
+    * leftCols…, asof_value). Strict `<`: a right row at exactly the left
+    * ts is NOT visible. Among equal-ts right rows the highest seq wins; a
+    * null rvalue is skipped. Nulls follow the equi-join rule: a right row
+    * whose key or ts is null is never visible, and a left row whose key
+    * or ts is null gets NULL.
     */
-  def asOfJoin(left: DataFrame, right: DataFrame, key: String, leftCols: Seq[String]): DataFrame = {
-    val l = left.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"), lit(null).cast("double").as("_rv")) ++
-        leftCols.map(col)): _*)
-    val r = right.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"), col("rvalue").as("_rv")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
-    // Strict '<': left(_side=1) sorts before right(_side=0)?  No — rows
-    // visible to a left row are those EARLIER in sort order. For strict
-    // inequality a right row with equal ts must sort AFTER the left row,
-    // so order ties as (left=1) < (right=0) via `_side` descending.
-    val w = Window
-      .partitionBy(col(key))
-      .orderBy(col("ts").asc, col("_side").desc, col("seq").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    l.unionByName(r)
-      .withColumn("asof_value", last(col("_rv"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 1)
-      .drop("_side", "_rv")
+  def asOfJoin(left: DataFrame, right: DataFrame, key: String, leftCols: Seq[String]): DataFrame =
+    merged(left, right, key, leftCols, inclusive = false)
+
+  /** Occupancy-balanced slice cut points for [[asOfJoinSkewSafe]]:
+    * the distinct approximate row-count quantiles (i/`slices`,
+    * 0 < i < `slices`) of `ts` micros over the union `u` — one
+    * distributed sketch agg, no sort. `None` on empty input (caller
+    * falls back to the plain join). Package-visible so the spec can
+    * probe per-slice occupancy with the operator's own cuts.
+    */
+  private[graft] def sliceCuts(u: DataFrame, slices: Int): Option[Seq[Long]] = {
+    val tsm = unix_micros(col("ts"))
+    val probs = (1 until slices).map(_.toDouble / slices)
+    val aggs = min(tsm).as("lo") +: (if (probs.nonEmpty)
+      Seq(percentile_approx(tsm, array(probs.map(lit): _*), lit(10000)).as("qs"))
+    else Seq.empty)
+    val bounds = u.agg(aggs.head, aggs.tail: _*).head()
+    if (bounds.isNullAt(0)) None
+    else Some(
+      if (probs.nonEmpty) bounds.getSeq[Long](1).distinct.sorted else Seq.empty)
   }
 
   /** A8h `asof_join_skew` — [[asOfJoin]] hardened for HOT KEYS, the
     * realistic skew axis of a 100 TB panel (one index/benchmark asset
     * carrying orders of magnitude more ticks than the median). The
-    * union-sort plan shuffles on the key alone, so a hot key's entire
-    * series lands on ONE reducer — and AQE's skew splitting only covers
-    * sort-merge joins, never window partitions. Random salting cannot
-    * fix an as-of (a left row must see ALL earlier right rows of its
-    * key); the scalable decomposition is TIME-SLICED two-phase:
+    * plain join shuffles on the key alone, so a hot key's entire series
+    * lands on ONE reducer — and AQE's skew splitting only covers
+    * sort-merge joins, never window partitions or a custom merge. Random
+    * salting cannot fix an as-of (a left row must see ALL earlier right
+    * rows of its key); the scalable decomposition is TIME-SLICED
+    * two-phase:
     *
     *  1. slice the timeline into `slices` contiguous OCCUPANCY-BALANCED
     *     intervals — cut points are the approximate ts quantiles of the
@@ -182,34 +220,9 @@ object AsOf {
     * SQL, and the spec proves equality with [[asOfJoin]] on a
     * deliberately Zipf-skewed panel.
     */
-  /** Occupancy-balanced slice cut points for [[asOfJoinSkewSafe]]:
-    * the distinct approximate row-count quantiles (i/`slices`,
-    * 0 < i < `slices`) of `ts` micros over the union `u` — one
-    * distributed sketch agg, no sort. `None` on empty input (caller
-    * falls back to the plain join). Package-visible so the spec can
-    * probe per-slice occupancy with the operator's own cuts.
-    */
-  private[graft] def sliceCuts(u: DataFrame, slices: Int): Option[Seq[Long]] = {
-    val tsm = unix_micros(col("ts"))
-    val probs = (1 until slices).map(_.toDouble / slices)
-    val aggs = min(tsm).as("lo") +: (if (probs.nonEmpty)
-      Seq(percentile_approx(tsm, array(probs.map(lit): _*), lit(10000)).as("qs"))
-    else Seq.empty)
-    val bounds = u.agg(aggs.head, aggs.tail: _*).head()
-    if (bounds.isNullAt(0)) None
-    else Some(
-      if (probs.nonEmpty) bounds.getSeq[Long](1).distinct.sorted else Seq.empty)
-  }
-
   def asOfJoinSkewSafe(left: DataFrame, right: DataFrame, key: String,
                        leftCols: Seq[String], slices: Int = 8): DataFrame = {
-    val l = left.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"), lit(null).cast("double").as("_rv")) ++
-        leftCols.map(col)): _*)
-    val r = right.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"), col("rvalue").as("_rv")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
-    val u = l.unionByName(r)
+    val u = tagged(left, right, key, leftCols)
     val cuts = sliceCuts(u, slices) match {
       case None    => return asOfJoin(left, right, key, leftCols) // empty input
       case Some(c) => c
@@ -254,53 +267,34 @@ object AsOf {
     * allowed (pandas `merge_asof`'s DEFAULT `allow_exact_matches=True`,
     * and the reference's own point-query bound `ts ≤ asof`,
     * file.rs:425): the latest right row at-or-before each left ts.
-    * Identical union-sort plan to [[asOfJoin]]; only the tie order
-    * flips — an equal-ts right row sorts BEFORE the left row and so
-    * becomes visible to its backward frame. Among equal-ts right rows
-    * the highest seq wins, consistent with the strict variant.
+    * The same one-pass merge as [[asOfJoin]], with the same type
+    * contract, null rule and output columns; only the bound flips —
+    * equal-ts right rows are consumed before the left row emits, so
+    * the highest-seq one among them is visible.
     */
   def asOfJoinInclusive(left: DataFrame, right: DataFrame, key: String,
-                        leftCols: Seq[String]): DataFrame = {
-    val l = left.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"), lit(null).cast("double").as("_rv")) ++
-        leftCols.map(col)): _*)
-    val r = right.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"), col("rvalue").as("_rv")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
-    val w = Window
-      .partitionBy(col(key))
-      .orderBy(col("ts").asc, col("_side").asc, col("seq").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    l.unionByName(r)
-      .withColumn("asof_value", last(col("_rv"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 1)
-      .drop("_side", "_rv")
-  }
+                        leftCols: Seq[String]): DataFrame =
+    merged(left, right, key, leftCols, inclusive = true)
 
   /** A8e `asof_join_forward` — forward as-of join (pandas
     * `merge_asof(direction='forward')`): each left row takes the value
-    * of the EARLIEST strictly-later right row. Mirror of [[asOfJoin]]
-    * with the frame reversed: same union-sort, same single shuffle on
-    * the key; tie order flips to (right before left) so an equal-ts
-    * right row stays invisible — strict `>`, symmetric with backward's
-    * strict `<`. Among equal-ts right rows the lowest seq wins (first
-    * in insert order — the mirror of backward's last-in-insert-order).
+    * of the EARLIEST strictly-later right row. The union-sort mirror of
+    * the backward join: union both sides, one shuffle on the key, and a
+    * window reading forward; tie order puts (right before left) so an
+    * equal-ts right row stays invisible — strict `>`, symmetric with
+    * backward's strict `<`. Among equal-ts right rows the lowest seq wins
+    * (first in insert order — the mirror of backward's
+    * last-in-insert-order).
     */
   def asOfJoinForward(left: DataFrame, right: DataFrame, key: String,
                       leftCols: Seq[String]): DataFrame = {
-    val l = left.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"), lit(null).cast("double").as("_rv")) ++
-        leftCols.map(col)): _*)
-    val r = right.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"), col("rvalue").as("_rv")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
     // Strict '>': an equal-ts right row must sort BEFORE the left row
     // (outside its following frame) → ties order (right=0) < (left=1).
     val w = Window
       .partitionBy(col(key))
       .orderBy(col("ts").asc, col("_side").asc, col("seq").asc)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    l.unionByName(r)
+    tagged(left, right, key, leftCols)
       .withColumn("asof_value", first(col("_rv"), ignoreNulls = true).over(w))
       .filter(col("_side") === 1)
       .drop("_side", "_rv")
@@ -322,16 +316,6 @@ object AsOf {
     */
   def asOfJoinNearest(left: DataFrame, right: DataFrame, key: String,
                       leftCols: Seq[String]): DataFrame = {
-    val l = left.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"),
-        lit(null).cast("double").as("_rv"),
-        lit(null).cast("timestamp").as("_rts")) ++
-        leftCols.map(col)): _*)
-    val r = right.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"),
-        col("rvalue").as("_rv"),
-        when(col("rvalue").isNotNull, col("ts")).as("_rts")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
     val wb = Window.partitionBy(col(key))
       .orderBy(col("ts").asc, col("_side").desc, col("seq").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -340,7 +324,7 @@ object AsOf {
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val gapB = unix_micros(col("ts")) - unix_micros(col("_bts"))
     val gapF = unix_micros(col("_fts")) - unix_micros(col("ts"))
-    l.unionByName(r)
+    tagged(left, right, key, leftCols, withRts = true)
       .withColumn("_bv", last(col("_rv"), ignoreNulls = true).over(wb))
       .withColumn("_bts", last(col("_rts"), ignoreNulls = true).over(wb))
       .withColumn("_fv", first(col("_rv"), ignoreNulls = true).over(wf))
@@ -360,32 +344,19 @@ object AsOf {
     * latest strictly-earlier right row is used ONLY if it is at most
     * `maxLagSec` old; staler matches yield NULL, exactly like no match.
     *
-    * Scale shape: IDENTICAL to [[asOfJoin]] — the union-sort trick with
-    * one extra carried column (the matched ts) and a post-window lag
-    * predicate. Tolerance costs ZERO extra shuffles or joins; a naive
+    * Scale shape: one union, one shuffle on the key and one backward
+    * window carrying one extra column (the matched ts), then a
+    * post-window lag predicate. Tolerance costs ZERO extra shuffles or joins; a naive
     * formulation (range join + per-row argmax) would pay a second
     * shuffle and a quadratic candidate set on hot keys.
     */
   def asOfJoinTolerance(left: DataFrame, right: DataFrame, key: String,
                         leftCols: Seq[String], maxLagSec: Long): DataFrame = {
-    val l = left.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"),
-        lit(null).cast("double").as("_rv"),
-        lit(null).cast("timestamp").as("_rts")) ++
-        leftCols.map(col)): _*)
-    val r = right.select(
-      (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"),
-        col("rvalue").as("_rv"),
-        // null exactly when rvalue is null: the ignoreNulls window picks
-        // value and its timestamp from the SAME right row, so the lag
-        // check always measures the row the value came from
-        when(col("rvalue").isNotNull, col("ts")).as("_rts")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
     val w = Window
       .partitionBy(col(key))
       .orderBy(col("ts").asc, col("_side").desc, col("seq").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    l.unionByName(r)
+    tagged(left, right, key, leftCols, withRts = true)
       .withColumn("_av", last(col("_rv"), ignoreNulls = true).over(w))
       .withColumn("_ats", last(col("_rts"), ignoreNulls = true).over(w))
       .filter(col("_side") === 1)

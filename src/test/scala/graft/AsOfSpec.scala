@@ -174,22 +174,7 @@ class AsOfSpec extends SparkSpec {
       (rnd.nextInt(5).toLong + 1, ts(rnd.nextInt(50)), 2000L + i, i.toDouble / 10))
     val lDf = left.toDF("user_id", "ts", "seq", "value")
     val rDf = right.toDF("user_id", "ts", "seq", "rvalue")
-    def bf(dir: String): Map[Long, Option[Double]] = left.map { case (k, t, s, _) =>
-      val cands = right.filter(_._1 == k)
-      def back = cands.filter(_._2.getTime < t.getTime).sortBy(c => (c._2.getTime, c._3)).lastOption
-      def fwd = cands.filter(_._2.getTime > t.getTime).sortBy(c => (c._2.getTime, c._3)).headOption
-      val chosen = dir match {
-        case "back" => back
-        case "incl" => cands.filter(_._2.getTime <= t.getTime).sortBy(c => (c._2.getTime, c._3)).lastOption
-        case "fwd"  => fwd
-        case "near" => (back, fwd) match {
-          case (Some(b), Some(f)) =>
-            if (t.getTime - b._2.getTime <= f._2.getTime - t.getTime) Some(b) else Some(f)
-          case (b, f) => b.orElse(f)
-        }
-      }
-      s -> chosen.map(_._4)
-    }.toMap
+    def bf(dir: String): Map[Long, Option[Double]] = AsOfBruteForce(left, right, dir)
     def run(df: DataFrame): Map[Long, Option[Double]] =
       df.select("seq", "asof_value").collect()
         .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap

@@ -482,6 +482,14 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.experimental.extraOptimizations = Nil
   }
 
+  test("the backward as-of joins plan the one-pass merge, not a window") {
+    for (q <- Seq("asof_join", "asof_join_inclusive")) {
+      val plan = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("AsOfJoin") && !plan.contains("Window"), s"$q:\n$plan")
+    }
+  }
+
   test("no query plan contains a cartesian product or unplanned BNL join") {
     val sfDir = "/root/testdata/sf0.001"
     // The replay/lifecycle harness rows EXECUTE their streaming or
