@@ -19,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.FindbAsOfRangeStrategy)
     ext.injectOptimizerRule(_ => graft.plans.DeriveMonthPartitionFilter)
   }
 }

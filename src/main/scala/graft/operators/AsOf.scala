@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.AsOfJoinNative
+import graft.plans.{AsOfJoinNative, FindbAsOfRange}
 
 /** Bitemporal as-of (point-in-time) operators.
   *
@@ -31,6 +31,13 @@ import graft.plans.AsOfJoinNative
   *     the scan, as they do on TickStore (month PartitionFilters +
   *     PushedFilters), the findb connector and the parquet panels. Over
   *     a source that cannot prune, that one task would read it whole.
+  *   - A single-asset [[asOfRange]] over a findb panel skips Spark
+  *     execution altogether: at planning, one B-tree descent per listed
+  *     store finds the asset's leaves, and the driver decodes them and
+  *     ranks the rows ([[FindbAsOfRange]]) — no job, no generated code,
+  *     no executor I/O. The driver holds one asset's leaf rows per store,
+  *     the reference's own point-query cost; a panel with more between
+  *     the projection and the relation keeps the one-task plan above.
   *   - Whole-panel reads ([[asOfSnapshot]], the LWW family) shuffle on
   *     `(asset_id, date)`, the panel's natural key, exactly once; AQE
   *     coalesces the post-shuffle partitions.
@@ -49,19 +56,22 @@ object AsOf {
   /** A1 `asof_point` — single-asset date-range as-of query.
     * Mirrors reference src/btree/file.rs:425 `BTree::query`.
     *
-    * The key filter sits directly on the scan (pushdown, month pruning);
-    * `coalesce(1)` above it makes the rank and the sort single-partition,
-    * so the read plans no exchange (see the scale notes above).
+    * Over a findb panel (the connector's relation under a deterministic
+    * projection) the read runs on the driver with no Spark job
+    * ([[FindbAsOfRange]]). Anywhere else the key filter sits directly on
+    * the scan (pushdown, month pruning); `coalesce(1)` above it makes the
+    * rank and the sort single-partition, so the read plans no exchange
+    * (see the scale notes above).
     */
   def asOfRange(panel: DataFrame, assetId: Long, startDate: String, endDate: String, asOf: String): DataFrame = {
     val filtered = panel.filter(
       col("asset_id") === assetId &&
         col("date").between(lit(startDate).cast("date"), lit(endDate).cast("date")) &&
         col("ts") <= lit(asOf).cast("timestamp"))
-      .coalesce(1)
-    latestPerKey(filtered, Seq("asset_id", "date"))
-      .select(col("asset_id"), col("date"), col("ts"), col("value"))
-      .orderBy(col("date").desc)
+    FindbAsOfRange.route(filtered, assetId).getOrElse(
+      latestPerKey(filtered.coalesce(1), Seq("asset_id", "date"))
+        .select(col("asset_id"), col("date"), col("ts"), col("value"))
+        .orderBy(col("date").desc))
   }
 
   /** A2 `asof_bulk` — N query rows against the panel at once.
@@ -121,7 +131,8 @@ object AsOf {
     * `_rts`, the right row's ts where its value is non-null: an
     * ignore-nulls window then picks value and timestamp from the SAME
     * right row, so a gap or lag check measures the row the value came
-    * from.
+    * from. Right rows with a null key or ts are dropped (the equi-join
+    * rule: never visible), so a null-key partition holds left rows only.
     */
   private def tagged(left: DataFrame, right: DataFrame, key: String, leftCols: Seq[String],
                      withRts: Boolean = false): DataFrame = {
@@ -129,7 +140,7 @@ object AsOf {
     val l = left.select(
       (Seq(col(key), col("ts"), col("seq"), lit(1).as("_side"), lit(null).cast("double").as("_rv")) ++
         rts(lit(null).cast("timestamp")) ++ leftCols.map(col)): _*)
-    val r = right.select(
+    val r = right.filter(col(key).isNotNull && col("ts").isNotNull).select(
       (Seq(col(key), col("ts"), col("seq"), lit(0).as("_side"), col("rvalue").as("_rv")) ++
         rts(when(col("rvalue").isNotNull, col("ts"))) ++
         leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
@@ -284,7 +295,7 @@ object AsOf {
     * equal-ts right row stays invisible — strict `>`, symmetric with
     * backward's strict `<`. Among equal-ts right rows the lowest seq wins
     * (first in insert order — the mirror of backward's
-    * last-in-insert-order).
+    * last-in-insert-order). Nulls follow [[asOfJoin]]'s equi-join rule.
     */
   def asOfJoinForward(left: DataFrame, right: DataFrame, key: String,
                       leftCols: Seq[String]): DataFrame = {
@@ -294,8 +305,9 @@ object AsOf {
       .partitionBy(col(key))
       .orderBy(col("ts").asc, col("_side").asc, col("seq").asc)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // a null left ts sorts first and would see every right row
     tagged(left, right, key, leftCols)
-      .withColumn("asof_value", first(col("_rv"), ignoreNulls = true).over(w))
+      .withColumn("asof_value", when(col("ts").isNotNull, first(col("_rv"), ignoreNulls = true).over(w)))
       .filter(col("_side") === 1)
       .drop("_side", "_rv")
   }
@@ -306,7 +318,8 @@ object AsOf {
     * matches is closer in event time; equal gaps resolve BACKWARD (the
     * "known at time t" conservative choice — documented, since pandas
     * leaves the tie unspecified across versions). `asof_dir` reports
-    * which side supplied the value (null when neither exists).
+    * which side supplied the value (null when neither exists). Nulls
+    * follow [[asOfJoin]]'s equi-join rule.
     *
     * Scale shape: ONE shuffle on the key feeding two in-partition
     * sorts (the backward and forward passes need opposite tie orders);
@@ -327,8 +340,9 @@ object AsOf {
     tagged(left, right, key, leftCols, withRts = true)
       .withColumn("_bv", last(col("_rv"), ignoreNulls = true).over(wb))
       .withColumn("_bts", last(col("_rts"), ignoreNulls = true).over(wb))
-      .withColumn("_fv", first(col("_rv"), ignoreNulls = true).over(wf))
-      .withColumn("_fts", first(col("_rts"), ignoreNulls = true).over(wf))
+      // a null left ts sorts first: no forward match, like no backward one
+      .withColumn("_fv", when(col("ts").isNotNull, first(col("_rv"), ignoreNulls = true).over(wf)))
+      .withColumn("_fts", when(col("ts").isNotNull, first(col("_rts"), ignoreNulls = true).over(wf)))
       .filter(col("_side") === 1)
       .withColumn("asof_value",
         when(col("_bts").isNotNull && (col("_fts").isNull || gapB <= gapF), col("_bv"))
@@ -343,6 +357,7 @@ object AsOf {
     * (pandas `merge_asof(tolerance=…)`, kdb `wj` within a window): the
     * latest strictly-earlier right row is used ONLY if it is at most
     * `maxLagSec` old; staler matches yield NULL, exactly like no match.
+    * Nulls follow [[asOfJoin]]'s equi-join rule.
     *
     * Scale shape: one union, one shuffle on the key and one backward
     * window carrying one extra column (the matched ts), then a

@@ -3,9 +3,9 @@ package graft.sources.findb
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -15,13 +15,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * {{{ spark.read.format("graft.sources.findb.FindbDataSource").load("panel.db") }}}
   *
-  * Scan strategy: emit rows from LEAF pages only (the inner nodes exist
-  * to serve single-machine point queries; a cluster scan partitions the
-  * page range instead — `pagesPerPartition` page-chunks become Spark
-  * input partitions, so one file reads in parallel). Key-range pruning
-  * then happens in Spark against the (asset_id, date, timestamp)
-  * columns, which at realistic selectivities costs one streaming pass —
-  * exactly what the reference's own full-panel extraction does.
+  * Scan strategy: emit rows from LEAF pages only (a cluster scan
+  * partitions the page range — `pagesPerPartition` page-chunks become
+  * Spark input partitions, so one file reads in parallel). Key-range
+  * pruning then happens in Spark against the (asset_id, date,
+  * timestamp) columns, which at realistic selectivities costs one
+  * streaming pass — exactly what the reference's own full-panel
+  * extraction does.
+  *
+  * The inner nodes serve two descents, both [[FindbBTree.candidateLeaves]]:
+  * the scan planner's (below: input partitions only for the leaves a
+  * pushed asset bound can touch), and the driver read that answers a
+  * single-asset `AsOf.asOfRange` with no Spark job
+  * (`graft.plans.FindbAsOfRange`).
   */
 class FindbDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -51,8 +57,11 @@ class FindbDataSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = false
 }
 
-class FindbTable(paths: Seq[String], pagesPerPartition: Int,
-                 withPriority: Boolean = false) extends Table with SupportsRead {
+/** `paths` and `withPriority` are public: `graft.plans.FindbAsOfRange`
+  * reads them to route a single-asset read to [[FindbBTree.assetRows]].
+  */
+class FindbTable(val paths: Seq[String], pagesPerPartition: Int,
+                 val withPriority: Boolean = false) extends Table with SupportsRead {
   override def name(): String = s"findb:${paths.mkString(",")}"
   override def schema(): StructType =
     if (withPriority) FindbFormat.schemaWithPriority else FindbFormat.schema
@@ -162,76 +171,11 @@ class FindbScan(paths: Seq[String], pagesPerPartition: Int,
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  override def supportedCustomMetrics(): Array[CustomMetric] = FindbMetrics.all
   override def description(): String =
     s"findb ${paths.mkString(",")} PushedAssetRange: [$assetLo, $assetHi]" +
       assetSet.map(s => s" PushedAssetSet: ${s.length} values").getOrElse("") +
       s" ReadColumns: ${required.fieldNames.mkString(",")}"
-
-  private def setOverlaps(lo: Long, hi: Long): Boolean = assetSet match {
-    case None => true
-    case Some(s) =>
-      // lowest set element >= lo, via binary search
-      var a = 0; var b = s.length
-      while (a < b) { val m = (a + b) >>> 1; if (s(m) < lo) a = m + 1 else b = m }
-      a < s.length && s(a) <= hi
-  }
-
-  /** Inner-node descent: collects the leaf pages whose separator-implied
-    * asset range can overlap [assetLo, assetHi] ∩ assetSet, in key
-    * order (= ascending page number for both writers' layouts). Reads
-    * only inner pages in full plus a 16-byte header per surviving
-    * child, so plan-time I/O is O(matching leaves / cap) pages — the
-    * reference's own descent cost (file.rs:425-470). Returns None when
-    * the surviving set is large enough that pruning buys nothing
-    * (caller falls back to full-range partitions; read-time page skip
-    * still applies).
-    */
-  private def candidateLeaves(pages: StorePages, lay: StoreLayout): Option[Array[Int]] = {
-    val limit = 1 << 18 // planner pread budget; beyond this, scan everything
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val head = new Array[Byte](PageHeaderSize)
-    val page = new Array[Byte](lay.pageSize)
-    def visit(p: Long, lo: Long, hi: Long): Boolean = { // false = budget blown
-      if (lo > assetHi || hi < assetLo || !setOverlaps(lo, hi)) return true
-      if (out.size > limit) return false
-      pages.read(p, head, PageHeaderSize)
-      if (u32(head, 0) == LeafType) { out += p.toInt; true }
-      else {
-        pages.read(p, page, lay.pageSize)
-        // children j = 0..nChildren-1; child j's keys live in
-        // [sep_{j-1}, sep_j) so its ASSET span is [sepAsset_{j-1},
-        // sepAsset_j] inclusive (asset equality with a smaller
-        // date/ts stays in child j). sep_0 = node lo, sep_n+1 = node hi.
-        // Parse into locals BEFORE recursing — `page` is one shared
-        // buffer, and a child visit overwrites it under the parent loop.
-        val nKeys = u32(page, 4).toInt
-        val extra = u32(page, 8)
-        val nChildren = nKeys + 1
-        val kids = new Array[Long](nChildren)
-        val sepAsset = new Array[Long](nKeys)
-        var j = 0
-        while (j < nChildren) {
-          kids(j) =
-            if (j == nKeys && extra != NoPage) extra
-            else u32(page, PageHeaderSize + j * KeyValueSize + 12)
-          if (j < nKeys) sepAsset(j) = u32(page, PageHeaderSize + j * KeyValueSize)
-          j += 1
-        }
-        j = 0
-        var ok = true
-        while (j < nChildren && ok) {
-          val cLo = if (j == 0) lo else sepAsset(j - 1)
-          val cHi = if (j == nKeys) hi else sepAsset(j)
-          ok = visit(kids(j), cLo, cHi)
-          j += 1
-        }
-        ok
-      }
-    }
-    if (lay.pageCount == 0) Some(Array.empty)
-    else if (visit(lay.rootPageNum, 0L, 0xFFFFFFFFL)) Some(out.toArray)
-    else None
-  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     // ordinals into the full (asset_id, date, timestamp, value[, pri]) row
@@ -247,7 +191,8 @@ class FindbScan(paths: Seq[String], pagesPerPartition: Int,
       val leaves: Option[Array[Int]] =
         if (pruned && assetLo <= assetHi) {
           val pg = new StorePages(lay, conf)
-          try candidateLeaves(pg, lay) finally pg.close()
+          try FindbBTree.candidateLeaves(pg, lay, assetLo, assetHi, assetSet.orNull)
+          finally pg.close()
         } else if (pruned) Some(Array.empty[Int]) // contradictory bounds
         else None
       // chunk an ABSOLUTE page run into per-file partitions with LOCAL
@@ -341,8 +286,10 @@ class FindbPartitionReader(p: FindbInputPartition,
   private var rowsInPage = 0
   private var pageIsLeaf = false
 
-  /** Pages read (post-skip) — exposed for the pushdown spec. */
-  var pagesRead: Int = 0
+  // leaf pages decoded / dropped by the page-level skip below; reported
+  // as the scan's custom metrics (SQL UI, executed plan)
+  private var pagesRead = 0L
+  private var pagesSkipped = 0L
 
   private def loadPage(): Unit = {
     in.readFully(p.byteOffset + pageNum.toLong * p.pageSize, pageBuf, 0, p.pageSize)
@@ -355,14 +302,10 @@ class FindbPartitionReader(p: FindbInputPartition,
     if (pageIsLeaf && rowsInPage > 0) {
       val firstAsset = u32(pageBuf, PageHeaderSize)
       val lastAsset = u32(pageBuf, PageHeaderSize + (rowsInPage - 1) * KeyValueSize)
-      val setHit = p.assetSet == null || {
-        val s = p.assetSet
-        var a = 0; var b = s.length
-        while (a < b) { val m = (a + b) >>> 1; if (s(m) < firstAsset) a = m + 1 else b = m }
-        a < s.length && s(a) <= lastAsset
-      }
-      if (lastAsset < p.assetLo || firstAsset > p.assetHi || !setHit) rowsInPage = 0
-      else pagesRead += 1
+      if (lastAsset < p.assetLo || firstAsset > p.assetHi ||
+          !FindbBTree.setOverlaps(p.assetSet, firstAsset, lastAsset)) {
+        rowsInPage = 0; pagesSkipped += 1
+      } else pagesRead += 1
     }
   }
 
@@ -377,22 +320,39 @@ class FindbPartitionReader(p: FindbInputPartition,
   }
 
   override def get(): InternalRow = {
-    val off = PageHeaderSize + rowIdx * KeyValueSize
-    val values = new Array[Any](p.ordinals.length)
-    var i = 0
-    while (i < p.ordinals.length) {
-      values(i) = p.ordinals(i) match {
-        case 0 => u32(pageBuf, off)
-        case 1 => u32(pageBuf, off + 4).toInt
-        case 2 => u32(pageBuf, off + 8)
-        case 3 => f32(pageBuf, off + 12)
-        case 4 => p.pri
-      }
-      i += 1
-    }
+    val row = FindbBTree.decode(pageBuf, PageHeaderSize + rowIdx * KeyValueSize, p.ordinals, p.pri)
     rowIdx += 1
-    new GenericInternalRow(values)
+    row
   }
 
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    FindbMetrics.task(FindbMetrics.PagesRead, pagesRead),
+    FindbMetrics.task(FindbMetrics.PagesSkipped, pagesSkipped))
+
   override def close(): Unit = in.close()
+}
+
+/** The scan's DSv2 custom metrics: leaf pages decoded and leaf pages
+  * dropped by the reader's key-span check. Plan-time pruned leaves are
+  * never opened and count in neither.
+  */
+object FindbMetrics {
+  val PagesRead = "pagesRead"
+  val PagesSkipped = "pagesSkipped"
+  def all: Array[CustomMetric] = Array(new FindbPagesReadMetric, new FindbPagesSkippedMetric)
+  def task(metric: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metric
+    override def value(): Long = v
+  }
+}
+
+// Spark instantiates metric classes by name: top-level, no-arg.
+class FindbPagesReadMetric extends CustomSumMetric {
+  override def name(): String = FindbMetrics.PagesRead
+  override def description(): String = "findb leaf pages read"
+}
+
+class FindbPagesSkippedMetric extends CustomSumMetric {
+  override def name(): String = FindbMetrics.PagesSkipped
+  override def description(): String = "findb leaf pages skipped"
 }

@@ -93,6 +93,34 @@ class AsOfJoinNativeSpec extends SparkSpec {
     }
   }
 
+  test("null keys and timestamps follow the equi-join rule in the window variants") {
+    // left null@10, 1@null, 2@10; right null@5, null@15, 1@20: no right
+    // row is visible to any left row
+    val left = Seq[(Option[Long], Option[Timestamp], Long, Double)](
+      (None, Some(ts(10)), 100L, 0.0), (Some(1L), None, 101L, 0.0), (Some(2L), Some(ts(10)), 102L, 0.0))
+      .toDF("user_id", "ts", "seq", "value")
+    val right = Seq[(Option[Long], Option[Timestamp], Long, Double)](
+      (None, Some(ts(5)), 1L, 1.0), (None, Some(ts(15)), 2L, 2.0), (Some(1L), Some(ts(20)), 3L, 3.0))
+      .toDF("user_id", "ts", "seq", "rvalue")
+    val none = Map(100L -> None, 101L -> None, 102L -> None)
+    for ((name, out) <- Seq(
+        "forward" -> AsOf.asOfJoinForward(left, right, "user_id", Seq("value")),
+        "nearest" -> AsOf.asOfJoinNearest(left, right, "user_id", Seq("value")),
+        "tolerance" -> AsOf.asOfJoinTolerance(left, right, "user_id", Seq("value"), 3600L),
+        "backward" -> AsOf.asOfJoin(left, right, "user_id", Seq("value")))) {
+      assert(bySeq(out) === none, name)
+    }
+    assert(AsOf.asOfJoinNearest(left, right, "user_id", Seq("value"))
+      .filter(col("asof_dir").isNotNull).isEmpty)
+    // a null right ts never matches, even where the key does
+    val nullTs = Seq[(Option[Long], Option[Timestamp], Long, Double)]((Some(2L), None, 4L, 4.0))
+      .toDF("user_id", "ts", "seq", "rvalue")
+    for (out <- Seq(AsOf.asOfJoinForward(left, nullTs, "user_id", Seq("value")),
+        AsOf.asOfJoinNearest(left, nullTs, "user_id", Seq("value")),
+        AsOf.asOfJoinTolerance(left, nullTs, "user_id", Seq("value"), 3600L)))
+      assert(bySeq(out) === none)
+  }
+
   test("non-long keys and non-timestamp ts are rejected at call time") {
     val left = Seq((1L, ts(10), 1L, 1.0)).toDF("user_id", "ts", "seq", "value")
     val right = Seq((1L, ts(5), 1L, 9.0)).toDF("user_id", "ts", "seq", "rvalue")

@@ -482,6 +482,56 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.experimental.extraOptimizations = Nil
   }
 
+  test("a findb single-asset read plans one LocalTableScan and runs no job") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files.createTempDirectory("audit_findb").toString + "/panel.db"
+    graft.sources.findb.FindbWriter.write(path, 16 + 4 * 16,
+      (0L until 40L).map(i => (i / 10, 20240101 + (i % 10).toInt, 1000L + i, i.toFloat)))
+    // the benchmark's panel shape and its caller-side select
+    def panel(raw: org.apache.spark.sql.DataFrame) = raw.select(col("asset_id"),
+      to_date(col("date").cast("string"), "yyyyMMdd").as("date"),
+      timestamp_seconds(col("timestamp")).as("ts"), col("value").cast("double").as("value"),
+      lit(0L).as("seq"))
+    val raw = spark.read.format("graft.sources.findb.FindbDataSource").load(path)
+    def read(p: org.apache.spark.sql.DataFrame) =
+      graft.operators.AsOf.asOfRange(p, 2L, "2024-01-01", "2024-01-31", "2030-01-01 00:00:00")
+        .select(col("asset_id"), datediff(col("date"), lit("2024-01-01").cast("date")).cast("long"),
+          unix_seconds(col("ts")), (col("value") * 4).cast("long"))
+    val routed = read(panel(raw))
+    val plan = routed.queryExecution.executedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], s"findb read:\n$plan")
+    for (op <- Seq("BatchScan", "WholeStageCodegen", "Window", "Exchange"))
+      assert(!plan.toString.contains(op), s"findb read plans $op:\n$plan")
+
+    // jobs per collect, counted by a listener; a marker job flushes the
+    // (asynchronous) listener bus before the count is read
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    def jobsOf(group: String)(body: => Any): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.containsKey(s"$group-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.containsKey(s"$group-marker"), "listener bus did not drain")
+      Option(jobs.get(group)).map(_.intValue).getOrElse(0)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val got = routed.collect().toSeq
+      assert(got.size === 10)
+      assert(jobsOf("audit-findb-routed")(read(panel(raw)).collect()) === 0)
+      // control: the window plan over a non-routable panel runs a job
+      assert(jobsOf("audit-findb-window")(read(panel(raw.filter(lit(true)))).collect()) >= 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("the backward as-of joins plan the one-pass merge, not a window") {
     for (q <- Seq("asof_join", "asof_join_inclusive")) {
       val plan = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
