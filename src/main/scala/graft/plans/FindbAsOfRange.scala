@@ -86,9 +86,11 @@ object FindbAsOfRange {
     * asset_id, date, ts, seq and value once each, and its asset_id is
     * the relation's own attribute, unchanged — so the descent on
     * `asset` drops only rows `cond` would drop. `cond` must pin
-    * asset_id to `asset`, as `AsOf.asOfRange`'s does.
+    * asset_id to `asset`, as `AsOf.asOfRange`'s does; the descent
+    * drops every other asset's rows without checking `cond`, so the
+    * method stays inside the package.
     */
-  def route(filtered: DataFrame, asset: Long): Option[DataFrame] =
+  private[graft] def route(filtered: DataFrame, asset: Long): Option[DataFrame] =
     filtered.queryExecution.analyzed match {
       case Filter(cond, Project(list, rel: DataSourceV2Relation)) =>
         val resolver = filtered.sparkSession.sessionState.conf.resolver

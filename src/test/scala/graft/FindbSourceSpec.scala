@@ -67,8 +67,30 @@ class FindbSourceSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getFloat(3)))
     assert(got.toSeq === entries.filter(_._1 == 42L).sortBy(_._3))
 
-    // the scan's pagesRead metric: the bounded read decodes far fewer
-    // leaf pages than an unbounded one, and the plan reports both counts
+    // reader-level page skip, without the scan's plan-time leaf pruning:
+    // a direct read over every page with bounds [42, 42] decodes far
+    // fewer leaf pages than an unbounded one and counts the rest skipped
+    val raf = new java.io.RandomAccessFile(path, "r")
+    val header = FindbFormat.readHeader(raf); raf.close()
+    def readerPages(lo: Long, hi: Long): Map[String, Long] = {
+      val rd = new graft.sources.findb.FindbPartitionReader(
+        graft.sources.findb.FindbInputPartition(
+          path, header.pageSize, 0, header.pageCount.toInt, lo, hi),
+        spark.sessionState.newHadoopConf())
+      try {
+        while (rd.next()) rd.get()
+        rd.currentMetricsValues().map(m => m.name() -> m.value()).toMap
+      } finally rd.close()
+    }
+    val full = readerPages(Long.MinValue, Long.MaxValue)
+    val bounded = readerPages(42L, 42L)
+    assert(full("pagesSkipped") === 0L)
+    assert(bounded("pagesRead") > 0 && bounded("pagesRead") < full("pagesRead") / 10,
+      s"expected page skipping: $bounded vs $full")
+    assert(bounded("pagesRead") + bounded("pagesSkipped") === full("pagesRead"))
+
+    // the same metrics from the executed BatchScan of real queries: the
+    // filtered query decodes far fewer leaf pages than an unfiltered one
     def pagesRead(d: org.apache.spark.sql.DataFrame): Long = {
       d.collect()
       val scans = d.queryExecution.executedPlan.collect {
